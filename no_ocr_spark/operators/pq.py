@@ -23,11 +23,14 @@ Spark-first, exact-oracle design (same discipline as `ann_ivf_kmeans`):
   * TRAIN (one Lloyd round, the real PQ codebook build): init each
     subspace's K centroids from vec_ids 1..K, assign every (vector,
     subspace) slice by max-cosine, refit as the rounded integer mean.
-    Cost shape at scale: one broadcast(M*K codebook) x scan assignment
-    + one groupBy whose cardinality is M*K*SUB — constant in corpus
-    size, exactly like the IVF build.
-  * ENCODE: final assignment emits (vec_id, m, code); the packed code
-    is the hex concat in subspace order — M bytes per vector vs
+    Each assignment pass is M slice rows per vector x a BROADCAST join
+    of the M*K-row codebook (a driver-local table) + ONE groupBy(vec_id)
+    argmax; the refit is one groupBy whose cardinality is M*K —
+    constant in corpus size, exactly like the IVF build. The codebook
+    rides as DATA, never as inlined literals, so the plan is the same
+    size at K=16 and K=256.
+  * ENCODE: the final assignment emits each vector's M codes; the
+    packed code is the hex concat in subspace order — M bytes per vector vs
     8*DIM bytes of float64 (64x at K<=256; the graded shape packs
     M=8 codes).
   * SEARCH (ADC): the M x K distance table holds EXACT int64 partial
@@ -49,6 +52,7 @@ SQ8's dim stats would; empty clusters simply drop out of the codebook
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -90,43 +94,56 @@ def _arr_lit(vals: list[int]) -> str:
     return "array({})".format(", ".join(f"{v}L" for v in vals))
 
 
-def _dot_unrolled(sv: str, cv: list[int]) -> str:
-    """<sv, literal cv> as an UNROLLED int64 add-chain. SUB is 8, so the
-    chain is tiny and stays whole-stage-codegen — the HOF form
-    (aggregate(zip_with(...))) is interpreted per element and was the
-    bulk of the assignment pass (r6; 128 dots/row x 2 passes). Integer
-    addition is associative, so the value is bit-identical to the fold."""
-    return " + ".join(
-        f"element_at({sv}, {i + 1}) * {v}L" for i, v in enumerate(cv)
+def _codebook(spark: SparkSession,
+              cents: dict[int, list[tuple[int, list[int]]]]) -> DataFrame:
+    """The M*K codebook as DATA: one (m, cid, c0..c{SUB-1}, cn) row per
+    centroid, cn = its exact int64 squared norm. Built from a pandas
+    frame, so it is a LocalRelation with a known size (a list goes
+    through a parallelized RDD instead)."""
+    names = ["m", "cid", *[f"c{i}" for i in range(SUB)], "cn"]
+    rows = [(m, cid, *cv, _idot_py(cv, cv))
+            for m in sorted(cents) for cid, cv in cents[m]]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=names, dtype="int64"))
+
+
+def _slices(emb: DataFrame) -> DataFrame:
+    """(vec_id, qv) -> M slice rows (vec_id, m, s0..s{SUB-1}, n), n the
+    exact int64 squared slice norm, staged once per slice row."""
+    s = [f"s{i}" for i in range(SUB)]
+    return (
+        emb.select("vec_id", "qv",
+                   F.explode(F.sequence(F.lit(1), F.lit(M))).alias("m"))
+        .select("vec_id", "m", *[
+            F.expr(f"element_at(qv, (m - 1) * {SUB} + {i + 1})").alias(c)
+            for i, c in enumerate(s)])
+        .select("vec_id", "m", *s,
+                F.expr(" + ".join(f"{c} * {c}" for c in s)).alias("n"))
     )
 
 
-def _dot_unrolled_col(sv: str) -> str:
-    """<sv, sv> as the same unrolled int64 chain (the slice norm)."""
-    return " + ".join(
-        f"element_at({sv}, {i + 1}) * element_at({sv}, {i + 1})"
-        for i in range(SUB)
+def _assign(slices: DataFrame, book: DataFrame, carry: bool) -> DataFrame:
+    """One assignment pass: every slice row scores every centroid of its
+    subspace (broadcast codebook join), then ONE groupBy(vec_id) picks
+    per subspace max(struct(csim, -cid)) — highest csim, ties to the
+    smallest cid, EXACTLY the oracle's row_number() order. csim is the
+    verbatim round(cosine, 6) double over an unrolled int64 dot (integer
+    addition is associative, so it is bit-equal to the oracle's fold).
+    Returns (vec_id, _p1.._pM), _pm.ncid = -code; `carry` also keeps
+    the slice (s0..) in the winner struct for the refit."""
+    dot = " + ".join(f"s{i} * c{i}" for i in range(SUB))
+    csim = (f"coalesce(round(({dot}) / (sqrt(cast(n as double)) "
+            f"* sqrt(cast(cn as double))), 6), -2.0)")
+    kept = [f"s{i}" for i in range(SUB)] if carry else []
+    return (
+        slices.join(F.broadcast(book), "m")
+        .select("vec_id", "m", F.struct(
+            F.expr(csim).alias("csim"), (-F.col("cid")).alias("ncid"),
+            *kept).alias("p"))
+        .groupBy("vec_id")
+        .agg(*[F.max(F.when(F.col("m") == m, F.col("p"))).alias(f"_p{m}")
+               for m in range(1, M + 1)])
     )
-
-
-def _code_expr(sv_col: str, n_col: str,
-               cents_m: list[tuple[int, list[int]]]) -> str:
-    """Assigned centroid id for one subspace slice — EXACTLY the old
-    `row_number() OVER (ORDER BY csim DESC, cid ASC) = 1` pick, as one
-    map-side greatest() over struct(csim, -cid): csim ties resolve to
-    max(-cid) = min cid. csim is the verbatim round(cosine, 6) double —
-    dot and centroid norm as exact int64 (unrolled chain / Python int
-    literal, both bit-equal to the old HOF folds), the slice norm staged
-    ONCE per row in `n_col` (the old form re-evaluated it per centroid,
-    r6 guide §1.2)."""
-    structs = ", ".join(
-        f"named_struct('csim', coalesce(round(({_dot_unrolled(sv_col, cv)})"
-        f" / (sqrt(cast({n_col} as double))"
-        f" * sqrt(cast({_idot_py(cv, cv)}L as double))), 6), -2.0), "
-        f"'ncid', {-cid}L)"
-        for cid, cv in cents_m
-    )
-    return f"-greatest({structs}).ncid"
 
 
 def _imean_py(s: int, n: int) -> int:
@@ -145,17 +162,19 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ codebook train (1 Lloyd round) -> M-byte codes -> ADC top-10
     for query = embedding(vec_id=0). Returns (vec_id, pq_code, score).
 
-    r6 plan shape (guide §1.2/§2.4, same rewrite as q_ann_ivf_kmeans):
-    the codebook is M*K rows of exact int64 — collect it per training
-    step and inline it as literals, so every per-(vector, subspace)
-    assignment is map-side codegen over a localCheckpoint'd slim frame
-    instead of an M-way explode + broadcast join + per-(vec, m)
-    row_number window. The old lazy form also recomputed the whole
-    train subtree twice (refit fed both the encode leg and the ADC
-    distance table). The distance table and query norms are pure int64
-    arithmetic on the collected codebook, replayed in Python where
-    arbitrary-precision ints equal in-range int64 ops exactly. Output
-    is bit-identical (verified at sf0.01/0.1/1)."""
+    Plan shape: the quantized embeddings are localCheckpoint'd once
+    and exploded into M slice rows (vec_id, m, s0.., n). Each assignment
+    pass joins those rows to the broadcast M*K codebook table, scores
+    csim with the oracle's exact round(cosine, 6) over codebook COLUMNS,
+    and picks per subspace max(struct(csim, -cid)) in one
+    groupBy(vec_id) — one hash exchange carrying one partial row per
+    vector. Inlining the collected codebook as M*K literal structs
+    instead grows the plan with K and overflows the JVM's 64 KB method
+    limit already at K=16, losing whole-stage codegen. The
+    refit, the distance table and the query norm are exact int64 math
+    on the collected codebook, replayed in Python where
+    arbitrary-precision ints equal in-range int64 ops; the ADC score is
+    M array lookups per vector. Output is bit-identical to the oracle."""
     emb = (
         fan_out_for_cpu(
             load_table(spark, sf_dir, "embeddings")
@@ -177,38 +196,20 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for cid in sorted(base) if 1 <= cid <= K]
         for m in range(1, M + 1)
     }
-    slices = [
-        F.expr(f"slice(qv, {(m - 1) * SUB + 1}, {SUB})").alias(f"_s{m}")
-        for m in range(1, M + 1)
-    ]
-    norms = [
-        F.expr(_dot_unrolled_col(f"_s{m}")).alias(f"_n{m}")
-        for m in range(1, M + 1)
-    ]
-    enc0 = emb.select(
-        "vec_id", *slices
-    ).select(
-        "vec_id", *[F.col(f"_s{m}") for m in range(1, M + 1)], *norms
-    ).select(
-        "vec_id",
-        *[F.col(f"_s{m}") for m in range(1, M + 1)],
-        *[F.expr(_code_expr(f"_s{m}", f"_n{m}", cents0[m])).alias(f"_c{m}")
-          for m in range(1, M + 1)],
-    )
+    sl = _slices(emb)
+    a0 = _assign(sl, _codebook(spark, cents0), carry=True)
     # one Lloyd refit: per (m, cid) integer sums of member slices +
-    # count, as SUB codegen sum() aggregates after a single explode of
-    # already-computed attribute columns (128-group shuffle)
+    # count, as SUB codegen sum() aggregates after a single inline of
+    # each vector's M winner structs (M*K-group shuffle)
     refit_rows = (
-        enc0.select(F.explode(F.expr(
-            "array({})".format(", ".join(
-                f"named_struct('m', {m}, 'cid', _c{m}, 'sv', _s{m})"
-                for m in range(1, M + 1)))
-        )).alias("e"))
-        .select("e.m", "e.cid", "e.sv")
+        a0.select(F.inline(F.array(*[
+            F.struct(F.lit(m).alias("m"),
+                     (-F.col(f"_p{m}.ncid")).alias("cid"),
+                     *[F.col(f"_p{m}.s{i}") for i in range(SUB)])
+            for m in range(1, M + 1)])))
         .groupBy("m", "cid")
         .agg(F.count("*").alias("n"),
-             *[F.sum(F.element_at("sv", i + 1)).alias(f"s{i}")
-               for i in range(SUB)])
+             *[F.sum(f"s{i}").alias(f"s{i}") for i in range(SUB)])
         .collect()
     )
     cents1: dict[int, list[tuple[int, list[int]]]] = {
@@ -236,15 +237,10 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         vals = [table.get(cid, 0) for cid in range(1, mx + 1)]
         return _arr_lit(vals)
 
-    enc1 = emb.filter(F.col("vec_id") != 0).select(
-        "vec_id", *slices
-    ).select(
-        "vec_id", *[F.col(f"_s{m}") for m in range(1, M + 1)], *norms
-    ).select(
-        "vec_id",
-        *[F.expr(_code_expr(f"_s{m}", f"_n{m}", cents1[m])).alias(f"_c{m}")
-          for m in range(1, M + 1)],
-    )
+    enc1 = _assign(sl.filter(F.col("vec_id") != 0),
+                   _codebook(spark, cents1), carry=False).select(
+        "vec_id", *[(-F.col(f"_p{m}.ncid")).alias(f"_c{m}")
+                    for m in range(1, M + 1)])
     sp = " + ".join(
         f"element_at({lut(pdot[m])}, cast(_c{m} as int))"
         for m in range(1, M + 1))

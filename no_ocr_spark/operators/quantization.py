@@ -165,16 +165,19 @@ def q_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # score over the FUSED dequant (sq8_dequant_direct_expr) — composing
     # the dequant transform over the codes column would inline the
     # 64-element codes transform inside every element reference
-    # (O(DIM^2) interpreted HOF work per row, x4: _cosine references its
-    # vector argument four times). codes itself is still materialized
-    # exactly once, for the digest.
+    # (O(DIM^2) interpreted HOF work per row). It is staged once as `dq`
+    # below the cosine, which references its vector argument several
+    # times; CollapseProject keeps a non-cheap expression with several
+    # consumers in its own projection. codes itself is still
+    # materialized exactly once, for the digest.
     dqd = sq8_dequant_direct_expr("qv", "minqs", "spans")
     return (
         enc.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(qd))
+        .select("vec_id", "label", "codes", "qd", F.expr(dqd).alias("dq"))
         .select(
             "vec_id", "label",
-            F.round(F.expr(_cosine("spark", f"({dqd})", "qd")), 6)
+            F.round(F.expr(_cosine("spark", "dq", "qd")), 6)
             .alias("score"),
             F.md5(F.expr(sq8_hex_expr("spark", "codes")).cast("binary"))
             .alias("sq8_digest"),

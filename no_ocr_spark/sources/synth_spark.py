@@ -37,15 +37,18 @@ def pages_df(spark: SparkSession, n_docs: int, seed: int = 42,
     )
 
 
-def pages_path(sf: float) -> str:
-    return os.path.join(DATA_DIR, f"pages_sf{sf}")
+def pages_path(sf: float, seed: int = 42) -> str:
+    """The default seed keeps the unsuffixed name, so existing caches
+    stay valid; any other seed gets its own directory."""
+    suffix = "" if seed == 42 else f"_seed{seed}"
+    return os.path.join(DATA_DIR, f"pages_sf{sf}{suffix}")
 
 
 def materialize_pages(spark: SparkSession, sf: float, seed: int = 42) -> str:
     """Write (once) and return the parquet path for the sf-sized corpus."""
     from no_ocr_spark.sources.synth import n_docs_for_sf
 
-    path = pages_path(sf)
+    path = pages_path(sf, seed)
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         pages_df(spark, n_docs_for_sf(sf), seed=seed).write.mode(

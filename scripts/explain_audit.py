@@ -230,6 +230,13 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def verdicts(plan: str, patterns: list[str]) -> list[tuple[str, bool]]:
+    """(pattern, ok) per marker: a plain pattern must match the plan, a
+    "!"-prefixed one must not."""
+    return [(pat, (re.search(pat[1:], plan) is None) if pat.startswith("!")
+             else (re.search(pat, plan) is not None)) for pat in patterns]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from no_ocr_spark.session import get_spark
@@ -244,12 +251,10 @@ def main() -> int:
     for name, patterns in CHECKS.items():
         plan = plan_of(qmap[name](spark, sf_dir))
         out.append(f"\n## {name}\n")
-        for pat in patterns:
+        for pat, ok in verdicts(plan, patterns):
             if pat.startswith("!"):
-                ok = re.search(pat[1:], plan) is None
                 out.append(f"- absent `{pat[1:]}`: {'OK' if ok else 'PRESENT'}\n")
             else:
-                ok = re.search(pat, plan) is not None
                 out.append(f"- `{pat}`: {'OK' if ok else 'MISSING'}\n")
             if not ok:
                 failures.append((name, pat))

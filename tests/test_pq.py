@@ -44,3 +44,62 @@ def test_deterministic_across_reruns(spark):
     a = [tuple(r) for r in q_ann_pq_topk(spark, SF).collect()]
     b = [tuple(r) for r in q_ann_pq_topk(spark, SF).collect()]
     assert a == b
+
+
+def _expr_nodes(df) -> int:
+    """Catalyst expression nodes in the optimized plan (a LocalRelation's
+    rows are data, not expressions)."""
+    import json
+
+    def walk(v):
+        if isinstance(v, list):
+            return sum(walk(x) for x in v)
+        if isinstance(v, dict):
+            own = str(v.get("class", "")).startswith(
+                "org.apache.spark.sql.catalyst.expressions.")
+            return own + sum(walk(x) for x in v.values())
+        return 0
+
+    return walk(json.loads(df._jdf.queryExecution().optimizedPlan().toJSON()))
+
+
+def test_assignment_plan_does_not_grow_with_codebook(spark):
+    """The assignment step over a K=16 and a K=256 codebook per subspace
+    (synthetic ints) plans the same expressions: the codebook is joined
+    as data, never inlined into the expressions."""
+    from pyspark.sql import functions as F
+
+    from no_ocr_spark.operators.pq import _assign, _codebook, _slices
+
+    emb = spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.expr(f"transform(sequence(1, {M * SUB}), "
+               "i -> (id * 31 + i * 17) % 201 - 100)").alias("qv"))
+    sizes = {}
+    for k in (16, 256):
+        cents = {m: [(cid, [(m * 977 + cid * 131 + i * 53) % 199 - 99
+                            for i in range(SUB)])
+                     for cid in range(1, k + 1)]
+                 for m in range(1, M + 1)}
+        picked = _assign(_slices(emb), _codebook(spark, cents), carry=False)
+        sizes[k] = _expr_nodes(picked)
+        rows = picked.select(
+            *[(-F.col(f"_p{m}.ncid")).alias(f"c{m}") for m in range(1, M + 1)]
+        ).collect()
+        assert len(rows) == 40
+        assert all(1 <= c <= k for r in rows for c in r)
+    assert sizes[16] == sizes[256]
+
+
+def test_no_codegen_stage_over_jvm_method_limit(spark):
+    """Every whole-stage-codegen subtree of the query compiles, and no
+    generated method reaches the JVM's 64 KB bytecode limit (a codebook
+    inlined as literal structs overflows it already at K=16)."""
+    df = q_ann_pq_topk(spark, SF)
+    df.collect()  # AQE builds its codegen stages at execution
+    subtrees = df._jdf.queryExecution().debug().codegenToSeq()
+    assert subtrees.size() > 0
+    for i in range(subtrees.size()):
+        stats = subtrees.apply(i)._3()
+        assert 0 <= stats.maxMethodCodeSize() < 64 * 1024, \
+            subtrees.apply(i)._1()
